@@ -41,18 +41,7 @@ object AnnRecall {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     val outPath = if (args.length > 1) args(1) else "/root/repo/target/ann_recall.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode only (same rationale as Bench): avoid parallel-listing
-      // jobs over many-small-file dirs
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     val json = run(spark, sfDir, nProbesProbe = 50, k = 10,
       includeSynth = true)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")

@@ -1,51 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench main: one JSON line, sec per query over SPARK_GRAFT_SF_DIR.
   * Also derives ingest throughput (records/s) from the streaming
   * round-trip per BASELINE.md's records/s target. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // parallel task-side commit of dynamic-partition files
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // local-mode only: client-side .crc checksums double the cost of
-      // many-small-file dynamic partition writes (measured 2x); real
-      // clusters rely on HDFS/S3 storage integrity instead
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // the state-store ASYNC maintenance thread (snapshot/cleanup) fires
-      // on a wall-clock interval and can land inside a timing window of
-      // whichever stateful-streaming entry is running (measured as a
-      // 1.5-2x outlier on one of three runs); the quiesce barrier unloads
-      // providers between runs anyway, so within-run maintenance buys
-      // nothing here — push it past any plausible entry duration
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      // many-small-file dirs (the HTTP spool's one-file-per-record
-      // putRecord analog: ~1600 files) trip the PARALLEL listing path at
-      // the default threshold (32), turning one driver-side readdir into
-      // a 1600-task Spark job — measured 2.6 s of pure dispatch on a
-      // local FS where the sequential stat loop is milliseconds. Local
-      // mode only: on a cluster against an object store the parallel
-      // listing is the right call and the default threshold stands.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-      // shuffle/localCheckpoint scratch on tmpfs: the container disk's
-      // writeback stalls made every ~4th run of the iterative operators
-      // ~2x slower (measured on canonicalize: [4.5..6.3]s stable on
-      // tmpfs vs periodic 10-14s spikes on disk). Real clusters put
-      // spark.local.dir on local SSDs; tmpfs is the local-mode analog.
-      .config("spark.local.dir", "/dev/shm/graft-bench-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // warm the codegen/scan machinery once so per-query numbers measure
     // the queries, not first-touch JVM initialization
     spark.range(100000).selectExpr("sum(id)").collect()

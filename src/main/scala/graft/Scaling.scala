@@ -103,22 +103,7 @@ object Scaling {
   private val SynthReplicas = 8
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // local-mode only (same rationale as Bench): avoid parallel-listing
-      // jobs over many-small-file fixture dirs
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.range(100000).selectExpr("sum(id)").collect() // JVM warm
     val json = run(spark, if (args.isEmpty) None else Some(args.toSet))
     // a filtered run is an iteration aid — never clobber the artifact

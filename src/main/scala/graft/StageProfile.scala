@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-STAGE wall-clock forensics for the composed flagship pipelines —
@@ -18,17 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-bench-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val bigDir = "/root/testdata/sf0.1"
     Scaling.ensureSynth(spark, bigDir, Scaling.SynthDir)
     val timings = scala.collection.mutable.LinkedHashMap

@@ -27,13 +27,6 @@ object Schemas {
   val envelopeSchema: StructType =
     StructType(Seq(StructField("Data", payloadSchema, nullable = true)))
 
-  /** Enriched record at rest (FIXTURES.md §1.2): payload + TenantId +
-    * epoch-seconds timestamp; partition columns derived, all strings. */
-  val enrichedSchema: StructType = StructType(
-    payloadSchema.fields ++ Seq(
-      StructField("TenantId", StringType, nullable = false),
-      StructField("timestamp", LongType, nullable = false)))
-
   val partitionCols: Seq[String] = Seq("tenant", "year", "month", "day", "hour")
 
   /** Hive partition-value derivation from an epoch-seconds column —

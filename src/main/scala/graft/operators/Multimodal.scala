@@ -27,12 +27,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_bytes", LongType)))
-
   /** Wrap a text table into a media table: payload bytes + typed metadata.
     * (Deterministic fake "images": the UTF-8 bytes of the text; metadata
     * derived from byte length — stands in for a parquet of real blobs.) */

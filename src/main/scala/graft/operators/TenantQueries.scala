@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{ExpressionWithUnresolvedIdentifier, PlanWithUnresolvedIdentifier, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Tenant-scoped query API (SURVEY §7.1 #5).
   *
@@ -29,9 +30,10 @@ object TenantQueries {
     spark.table(table).filter(col("tenant") === lit(ctx.tenantId))
 
   /** General passthrough: user SQL over a view that is already
-    * tenant-filtered. Isolation is ENFORCED, not assumed: `spark.sql` runs
-    * with full catalog access, so before execution the SQL is parsed with
-    * the QUERY-ONLY grammar (`parseQuery` — INSERT/commands/any
+    * tenant-filtered and visible to this query only. Isolation is
+    * ENFORCED, not assumed: analysis runs with full catalog access, so
+    * before execution the SQL is parsed with the QUERY-ONLY grammar
+    * (`parseQuery` — INSERT/commands/any
     * side-effecting statement fail to parse) and every table reference
     * must resolve to the tenant view or a CTE that is lexically IN SCOPE
     * at the reference site. Scoping matters: a CTE merely named somewhere
@@ -54,8 +56,12 @@ object TenantQueries {
     require(illegal.isEmpty,
       s"tenant-scoped SQL may only reference '$viewName' (and its own in-scope CTEs); " +
         s"found: ${illegal.sorted.mkString(", ")}")
-    queryByTenant(spark, table).createOrReplaceTempView(viewName)
-    spark.sql(userSql)
+    // the tenant view is bound into THIS plan as an outer CTE, never
+    // registered on the session: a session-global temp view could be
+    // swapped by a concurrent call for another tenant between its
+    // registration and this query's analysis
+    val tenantView = SubqueryAlias(viewName, queryByTenant(spark, table).queryExecution.analyzed)
+    PlanBridge.dataFrame(spark, UnresolvedWith(parsed, Seq((viewName, tenantView, None))))
   }
 
   /** Relation references that are not in the LEXICAL scope of allowed

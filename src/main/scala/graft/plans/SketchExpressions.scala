@@ -27,20 +27,6 @@ object Sketches {
 
   def permuteA(j: Int): Long = (j * 2 + 1) * GoldenGamma | 1L // odd multiplier
   def permuteB(j: Int): Long = XXH64.hashLong(j.toLong, 7L)
-
-  def minhashRef(shingles: Seq[String], n: Int): Array[Long] = {
-    val mins = Array.fill(n)(Long.MaxValue)
-    shingles.foreach { s =>
-      val h = XXH64.hashUTF8String(UTF8String.fromString(s), 42L)
-      var j = 0
-      while (j < n) {
-        val hj = permuteA(j) * h + permuteB(j)
-        if (hj < mins(j)) mins(j) = hj
-        j += 1
-      }
-    }
-    mins
-  }
 }
 
 /** array<string> shingles → array<long> of `nHashes` min-hash values. */

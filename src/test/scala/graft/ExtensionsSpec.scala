@@ -74,5 +74,7 @@ class ExtensionsSpec extends SparkSpec {
     // every oracle key must have a query backing it
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
+    // SparkEntry.entry is the smoke entry point: it must return rows
+    assert(SparkEntry.entry(spark).count() > 0, "SparkEntry.entry returned no rows")
   }
 }

@@ -174,6 +174,20 @@ class PropertySpec extends SparkSpec {
     assert(scoped.as[Long].head() == ok)
   }
 
+  test("sqlInTenantScope: concurrent tenants on one session see only their own rows") {
+    import graft.operators.{TenantContext, TenantQueries}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Seq("a", "b").toDF("tenant").createOrReplaceTempView("race_events")
+    val runs = Seq("a", "b").map(t => t -> Future(Seq.fill(150)(
+      TenantQueries.sqlInTenantScope(spark, "race_events",
+        "SELECT DISTINCT tenant FROM tenant_events")(TenantContext(t))
+        .collect().map(_.getString(0)).toSet)))
+    val leaks = runs.map { case (t, f) =>
+      t -> Await.result(f, scala.concurrent.duration.Duration.Inf).count(_ != Set(t)) }
+    assert(leaks.forall(_._2 == 0), s"results with another tenant's rows: $leaks")
+  }
+
   test("enrichment is payload-preserving under arbitrary extra fields") {
     val raws = Seq.fill(30) {
       val extra = rng.alphanumeric.take(6).mkString

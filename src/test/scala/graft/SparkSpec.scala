@@ -5,14 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run. */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = LocalSession.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
     .getOrCreate()
 }
